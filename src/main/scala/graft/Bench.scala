@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** The benchmark session. Shared with [[graft.tools.Quick]] so targeted
-    * timings are directly comparable to full-suite numbers.
+  /** The benchmark session. Shared with the remaining `graft.tools` mains
+    * so their numbers and plans are those the timed runs execute.
     */
   def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()

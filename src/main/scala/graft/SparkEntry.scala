@@ -1058,7 +1058,7 @@ object SparkEntry {
         // (per-partkey avg aggregated then self-joined back) scanned the
         // DOMINANT table twice and exchanged it twice; at 100 TB the
         // second scan is the cost that matters, and the r13 sf10 A/B
-        // (tools/Q17Probe) measured the window form at consistently
+        // (SCALE_STRESS.md round 13) measured the window form at consistently
         // lower taskTime (41.5-55 vs 44.5-135 core-s) with identical
         // output. The window's avg IS the same Spark avg the agg branch
         // computed, so borderline `l_quantity < 0.2*avg` comparisons are
@@ -1914,7 +1914,7 @@ object SparkEntry {
     // bound CHECK as a boolean, the oracle emits the exact denominator
     // plus literal TRUE — a recall regression flips the boolean and
     // fails the hash compare). Floors are evidence-based loose lower
-    // bounds (tools/RecallProbe at sf0.001/0.01/0.1: nProbe=1 measures
+    // bounds (SCALE_STRESS.md round 15, sf0.001/0.01/0.1: nProbe=1 measures
     // 0.19-0.28, nProbe=4 0.46-0.66, nProbe=8 0.63-0.88 — the synthetic
     // embeddings are near-uniform, the hard case for IVF; a broken
     // assignment path lands at ~nProbe/nCells ≈ 0.01-0.1); the per-run
@@ -2007,8 +2007,8 @@ object SparkEntry {
     // the QUANTIZATION error ADC stacks on top of cell pruning. One
     // [[Similarity.IvfPqIndex.rankedCandidates]] pass (cell ranking +
     // code join + ADC sums) serves every nProbe config via the nested
-    // cell_rank filter; floors are RecallProbe-derived loose lower
-    // bounds at m=8, k=10 (pq mode, measured sf0.001/0.01/0.1:
+    // cell_rank filter; floors are loose lower bounds at m=8, k=10 from
+    // measured recall (NOTES.md round 16; sf0.001/0.01/0.1:
     // nProbe=1 0.084-0.172, nProbe=2 0.108-0.214, nProbe=4
     // 0.124-0.238 — the seed codebooks quantize near-uniform synthetic
     // residuals coarsely, and recall declines with corpus size as
@@ -2334,7 +2334,7 @@ object SparkEntry {
         // rank slack for ties). Primary path: the one-scan histogram
         // census (Stats.censusQuantileBoundCheck) — the census IS both
         // the sketch and the verification (~10 vs ~47 core-s for
-        // sketch+check at sf10, tools/QuantProbe), with the bin range
+        // sketch+check at sf10, NOTES.md round 17), with the bin range
         // proved by parquet footers (zero jobs). Fallback when footer
         // stats are untrustworthy: approx_percentile(accuracy=1000) +
         // one verification scan — the prior gate form, kept verbatim.

@@ -252,7 +252,7 @@ object Dedup {
     * the joined row) followed by a candidate distinct + array-fetch
     * verify — was built and measured at the sf10 tier in round 13:
     * 2163 task-core-s vs 1081 for this aggregation in the same session
-    * (tools/ContProbe, identical 25,600-pair output). The filter is
+    * (identical 25,600-pair output; SCALE_STRESS.md round 13). The filter is
     * structurally weak on real length mixes: any pair touching a SMALL
     * doc keeps near-full prefixes (k ≈ t*n_small leaves n − k + 1 ≈ n
     * positions on the large side), so the candidate set stays
@@ -280,7 +280,7 @@ object Dedup {
     //    volume scales with (1-t)² of the full co-occurrence stream.
     //    At the operator default t=0.8 the r13 rejection has INVERTED
     //    under the sorted-array natives: a 10-rep alternated sf10 A/B
-    //    (tools/ContProbe, 4 sessions) has prefix winning 8 of 10 warm
+    //    (4 sessions, OPTIMIZATION_r18.md) has prefix winning 8 of 10 warm
     //    comparisons, median 464 vs 778 task-s (guide §2.2/§2.3: fewer
     //    rows into the wide exchange). At t=0.6 the SAME protocol has
     //    prefix losing every rep (1651-2732 vs 931-1180 task-s) — the
@@ -1129,7 +1129,8 @@ object Dedup {
     * variants equal on real testdata, and both run under the same oracle
     * gate (the hashed gate doubles as an empirical no-collision check).
     *
-    * Measured honestly (Quick A/B at sf1, local[32], rep3): parity with
+    * Measured honestly (A/B at sf1, local[32], rep3; SCALE_STRESS.md
+    * round 10): parity with
     * the text-keyed form (2.38 vs 2.35 s) — the map-side (span, doc)
     * collapse already bounds local shuffle volume, so the 8-byte key buys
     * nothing on a single box at width 8. It pays when the shuffle crosses
@@ -1294,12 +1295,16 @@ object Dedup {
       // ids are dropped BEFORE the collect (getLong on a null id NPE'd
       // the driver where the distributed loops would not crash; upstream
       // pair generation never emits them, so this is tolerance, not a
-      // semantic change).
+      // semantic change). A non-null id the long cast nulls (a
+      // non-numeric string) fails the job instead of vanishing.
       val tupleEnc = org.apache.spark.sql.Encoders.tuple(
         org.apache.spark.sql.Encoders.scalaLong,
         org.apache.spark.sql.Encoders.scalaLong)
+      def longId(c: String) = when(col(c).isNotNull && col(c).cast("long").isNull,
+          raise_error(concat(lit(s"smallGraphLabels: $c is not a long id: "), col(c).cast("string"))))
+        .otherwise(col(c).cast("long")).as(c)
       val edges = pairs
-        .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
+        .select(longId("doc_a"), longId("doc_b"))
         .filter(col("doc_a").isNotNull && col("doc_b").isNotNull)
         .as(tupleEnc)
         .collect()

@@ -684,14 +684,40 @@ object PlugState {
   /** Latest cursor per plug — the status-endpoint scan (S3). Check-ins of
     * empty batches carry a null cursor and are skipped (the cursor is the
     * newest batch that actually advanced the block high-water mark).
+    *
+    * Safe beside a live [[checkIn]] (the status endpoint polls while the
+    * feed writes): only committed (`_SUCCESS`) dirs are read, the newest
+    * [[KeepLast]] first — the ones a racing [[prune]] leaves in place —
+    * and the older dirs (the roll-up) only when none of those has a
+    * cursor. A listed dir that a prune deletes mid-read re-lists instead
+    * of failing the request.
     */
   def latest(spark: SparkSession, outDir: String, plugName: String): Option[(Long, Long)] = {
-    val rows = read(spark, outDir, plugName)
-      .filter(col("latest_block_num").isNotNull)
-      .orderBy(col("batch_id").desc).limit(1).collect()
-    rows.headOption.map { r =>
-      (r.getAs[Long]("batch_id"), r.getAs[Int]("latest_block_num").toLong)
+    val root = stateRoot(outDir, plugName)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dir(v: Long) = new org.apache.hadoop.fs.Path(root, s"v=$v")
+    def newest(vs: Seq[Long]): Option[(Long, Long)] =
+      if (vs.isEmpty) None
+      else spark.read.parquet(vs.map(dir(_).toString): _*)
+        .filter(col("latest_block_num").isNotNull)
+        .orderBy(col("batch_id").desc).limit(1).collect().headOption
+        .map(r => (r.getAs[Long]("batch_id"), r.getAs[Int]("latest_block_num").toLong))
+    def vanished(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+        case _: java.io.FileNotFoundException => true
+        case t: org.apache.spark.SparkThrowable => Option(t.getCondition)
+          .exists(c => c.startsWith("PATH_NOT_FOUND") || c.startsWith("FAILED_READ_FILE"))
+        case _ => false
+      }
+    @annotation.tailrec def attempt(retries: Int): Option[(Long, Long)] = {
+      val vs = versionIds(fs, root)
+        .filter(v => fs.exists(new org.apache.hadoop.fs.Path(dir(v), "_SUCCESS")))
+      scala.util.Try(newest(vs.takeRight(KeepLast)).orElse(newest(vs.dropRight(KeepLast)))) match {
+        case scala.util.Failure(e) if retries > 0 && vanished(e) => attempt(retries - 1)
+        case got => got.get
+      }
     }
+    attempt(retries = 5)
   }
 
   /** Fork rollback of the check-in history: drop every `v >= fromBatch`

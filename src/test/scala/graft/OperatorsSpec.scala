@@ -186,6 +186,14 @@ class OperatorsSpec extends SparkSpec {
         .map(x => x.getAs[Long]("doc") -> x.getAs[Long]("cluster")).toMap
       assert(r === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
     } finally withNull.unpersist()
+    // a non-null id the long cast nulls fails loudly instead of dropping
+    // its edge (and with it the doc) from the cluster output
+    val nonNumeric = Seq(("1", "2"), ("x7", "3")).toDF("doc_a", "doc_b").persist()
+    try {
+      nonNumeric.count()
+      val e = intercept[Exception](Dedup.smallGraphLabels(nonNumeric).get.collect())
+      assert(e.getMessage.contains("doc_a is not a long id: x7"), e.getMessage)
+    } finally nonNumeric.unpersist()
   }
 
   test("near-dup clustering: chains collapse to min-id components") {
@@ -434,18 +442,24 @@ class OperatorsSpec extends SparkSpec {
     val raw = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val target = Seq((100L, "target like tokens appear here often"),
       (101L, "alpha beta gamma appears in target too")).toDF("doc_id", "text")
-    def run(): Map[Long, (Long, Double, Long)] =
-      Sampling.importanceResample(raw, target, "text", "doc_id", 64, 0.5)
+    def run(corpus: org.apache.spark.sql.DataFrame = raw, keepFraction: Double = 0.5,
+            binMax: Long = Long.MaxValue): Map[Long, (Long, Double, Long)] =
+      Sampling.importanceResample(corpus, target, "text", "doc_id", 64, keepFraction, binMax)
         .collect().map(r => r.getAs[Long]("doc_id") ->
           ((r.getAs[Long]("n_feats"), r.getAs[Double]("log_weight"),
             r.getAs[Long]("keep")))).toMap
     val viaHist = run()
     // force the exact-rank fallback through the tie-mass guard
-    val saved = Sampling.histBinCollectMax
-    val viaRank =
-      try { Sampling.histBinCollectMax = 0L; run() }
-      finally { Sampling.histBinCollectMax = saved }
+    val viaRank = run(binMax = 0L)
     assert(viaHist === viaRank)
+    // K = floor(0.1 * 8) = 0: every doc is scored, none kept
+    val none = run(keepFraction = 0.1)
+    assert(none.size === texts.size && none.values.forall(_._3 == 0L))
+    // raw == target: every log ratio is equal (hi <= lo), so the
+    // one-point weight domain takes exact rank and keeps the lowest ids
+    val flat = run(corpus = target)
+    assert(flat.values.map(_._2).toSet.size === 1)
+    assert(flat.collect { case (d, (_, _, 1L)) => d }.toSet === Set(100L))
     // the cut is exactly floor(0.5 * n) keeps
     assert(viaHist.values.count(_._3 == 1L) ===
       math.floor(0.5 * viaHist.size).toLong)

@@ -173,7 +173,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("containment: one shingle self-join straight into the pair aggregation — no candidate/fetch chain") {
-    // round-13 A/B verdict pinned as a shape (tools/ContProbe, sf10:
+    // round-13 A/B verdict pinned as a shape (SCALE_STRESS.md round 13, sf10:
     // aggregation 1081 task-core-s vs prefix-candidates+verify 2163):
     // the plan must be the SINGLE sort-merge self-join feeding the pair
     // count — a candidate distinct + two array-fetch joins (the rejected

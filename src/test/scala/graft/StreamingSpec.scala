@@ -177,6 +177,32 @@ class StreamingSpec extends SparkSpec {
     assert(PlugState.latest(spark, out, "podping") === Some((17L, 117L)))
   }
 
+  test("plug_state latest beside live check-ins: no read failure, no backwards cursor") {
+    import graft.streaming.PlugState
+    val out = tmp()
+    // every third batch is empty (null cursor); 60 check-ins fold the
+    // history six times while the reader polls, as the status route does
+    val batches = (0 until 60).map { i =>
+      if (i % 3 == 2) opLog(spark, Seq.empty)
+      else opLog(spark, Seq(
+        op(i.toLong, 100 + i, 0, "2024-01-01 00:00:00", "podping", podpingV03(Seq(s"u$i")))))
+    }
+    assert(PlugState.latest(spark, out, "podping") === None) // no check-in yet
+    PlugState.checkIn(spark, out, "podping", 0L, batches.head)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val writer = new Thread(() =>
+      try batches.zipWithIndex.tail.foreach { case (b, i) =>
+        PlugState.checkIn(spark, out, "podping", i.toLong, b)
+      } finally done.set(true))
+    val seen = scala.collection.mutable.ArrayBuffer[Long]()
+    writer.start()
+    try while (!done.get) PlugState.latest(spark, out, "podping").foreach(seen += _._2)
+    finally writer.join()
+    assert(seen.size > 5, s"reader saw only ${seen.size} cursors")
+    assert(seen == seen.sorted, s"cursor went backwards: $seen")
+    assert(PlugState.latest(spark, out, "podping") === Some((58L, 158L)))
+  }
+
   test("backfill: chunked historical batches, then plug_state cursor advances") {
     val src = tmp(); val out = tmp()
     writeBatch(src, 1, (0 until 30).map { i =>

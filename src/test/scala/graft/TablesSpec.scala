@@ -66,6 +66,16 @@ class TablesSpec extends SparkSpec {
     assert(loaded.limit(1).count() == 1)
   }
 
+  test("SparkEntry.entry returns rows on a session built without graft configs") {
+    // the way a generic driver calls it: a fresh session carrying none of
+    // GraftSession's confs (builder-level ones unset too) and no graft
+    // functions, so entry() must configure everything it needs itself
+    val bare = spark.newSession()
+    Seq("spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong",
+      "spark.sql.shuffle.partitions").foreach(bare.conf.unset)
+    assert(SparkEntry.entry(bare).count() > 0)
+  }
+
   test("RowCounts: footer metadata agrees with a scan count, at every plan shape") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     // bare scan: the footer fast path must equal the scan-job answer
