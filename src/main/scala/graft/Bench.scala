@@ -157,6 +157,52 @@ object Bench {
       None
     }
 
+  private def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** Printed-line budget: the line is parsed from the last 2000 chars of
+    * stdout, which also hold sbt's epilogue; the rest is margin.
+    */
+  val Budget = 1800
+
+  /** The printed bench line. Every query row when it fits the budget;
+    * otherwise the largest slowest-first prefix of rows that fits, the
+    * rest folded into an `omitted` summary (count and summed seconds) so
+    * value == sum(queries) + omitted.sum. Failed queries (sentinel -1)
+    * are omitted first and only counted (`failed`). `taskSec` (slowest
+    * first) rides along when everything fits, else shrinks with the kept
+    * rows so that the line always fits. `tail` follows the query map
+    * (baseline fields, `sf`).
+    */
+  private[graft] def line(results: Seq[(String, Double)], taskSec: Seq[(String, Double)],
+                          failed: Int, tail: String, budget: Int = Budget): String = {
+    val total = results.collect { case (_, v) if v >= 0 => v }.sum
+    def render(rs: Seq[(String, Double)], extra: String): String = {
+      val qs = rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$extra$tail}"""
+    }
+    def taskSecJson(n: Int): String = {
+      val top = taskSec.take(n).map { case (k, v) =>
+        "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.2f", Double.box(v)) }
+      if (top.isEmpty) "" else s""","task_sec":${top.mkString("{", ",", "}")}"""
+    }
+    val full = render(results, taskSecJson(taskSec.size))
+    if (full.length <= budget) full
+    else {
+      // failures sort LAST so kept values are real times
+      val bySlowest = results.sortBy { case (_, v) => if (v < 0) Double.MaxValue else -v }
+      var keep = bySlowest.length
+      var out = render(results, "")
+      while (keep > 0 && out.length > budget) {
+        keep -= 1
+        val omitted = bySlowest.drop(keep)
+        val omittedSecs = omitted.collect { case (_, v) if v >= 0 => v }.sum
+        val extra = s""","omitted":{"n":${omitted.length},"sum":${fmt(omittedSecs)},"failed":$failed,"full":"BENCH_LOCAL.json"}${taskSecJson(keep)}"""
+        out = render(bySlowest.take(keep), extra)
+      }
+      out
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -338,7 +384,6 @@ object Bench {
     // per-query entries as the budget allows, the rest folded into an
     // "omitted" summary (count + summed seconds), so the parsed line is
     // self-consistent: value == sum(queries) + omitted.sum.
-    def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     // same-window baseline (see duckBaseline): runs AFTER the engine's
     // timed passes — with the Spark context STOPPED first, so the
@@ -368,11 +413,8 @@ object Bench {
           s""","engine_total":${fmt(total)},"duck_total":${fmt(dt)},"duck_warmed":true,"ratio":${fmt(total / dt)}"""
         case _ => ""","engine_total":null,"duck_total":null,"ratio":null"""
       }
-    def render(rs: Seq[(String, Double)], extra: String): String = {
-      val qs = rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$extra$duckExtra,"sf":"$sfDir"}"""
-    }
-    val fullLine = render(results, "")
+    val tail = s"""$duckExtra,"sf":"$sfDir""""
+    val fullLine = line(results, Nil, timedFails, tail, budget = Int.MaxValue)
     val metricsJson = planMetrics.map { case (k, (j, tk, ts)) =>
       "\"" + k + "\":{\"jobs\":" + j + ",\"tasks\":" + tk + ",\"task_sec\":" + fmt(ts) + "}"
     }.mkString(",\"plan_metrics\":{", ",", "}")
@@ -382,7 +424,6 @@ object Bench {
     val fullRecord = fullLine.patch(fullLine.lastIndexOf("}"), metricsJson + duckJson + "}", 1)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LOCAL.json"), fullRecord + "\n")
     catch { case _: Throwable => () }
-    val Budget = 1800 // 2000-char tail minus the sbt epilogue, with margin
     // Deterministic per-query task-seconds for the slowest rows ride the
     // printed line (r17 verdict task 5, additions-only): wall clock on a
     // shared host swings with external load, while summed task time is
@@ -390,37 +431,9 @@ object Bench {
     // host drift without the full BENCH_LOCAL record. Top 20 by wall,
     // 2-decimal, ~600 chars of the tail budget; the full per-query map
     // stays in BENCH_LOCAL.json.
-    def fmt2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val taskSecJson = {
-      val top = results.filter(_._2 >= 0).sortBy(-_._2).take(20)
-        .flatMap { case (n, _) =>
-          planMetrics.get(n).map(m => "\"" + n + "\":" + fmt2(m._3)) }
-      if (top.isEmpty) "" else s""","task_sec":${top.mkString("{", ",", "}")}"""
-    }
-    val line =
-      if (fullLine.length + taskSecJson.length <= Budget)
-        render(results, taskSecJson)
-      else {
-        // failures (sentinel -1) sort LAST, not as if they took 1 second:
-        // they must be the first entries omitted so kept values are real
-        // times and the invariant value == sum(queries) + omitted.sum holds
-        val bySlowest = results.sortBy { case (_, v) => if (v < 0) Double.MaxValue else -v }
-        // largest prefix of slowest-first entries whose rendered line fits
-        var keep = bySlowest.length
-        var out = fullLine
-        while (keep > 0 && out.length > Budget) {
-          keep -= 1
-          val omitted = bySlowest.drop(keep)
-          // failed queries carry the -1 sentinel: keep them out of the
-          // omitted-seconds sum (value == sum(queries) + omitted.sum must
-          // hold) and surface them as an explicit count instead
-          val omittedSecs = omitted.collect { case (_, v) if v >= 0 => v }.sum
-          val extra = s""","omitted":{"n":${omitted.length},"sum":${fmt(omittedSecs)},"failed":$timedFails,"full":"BENCH_LOCAL.json"}$taskSecJson"""
-          out = render(bySlowest.take(keep), extra)
-        }
-        out
-      }
-    println(line)
+    val taskSec = results.filter(_._2 >= 0).sortBy(-_._2).take(20)
+      .flatMap { case (n, _) => planMetrics.get(n).map(m => n -> m._3) }
+    println(line(results, taskSec, timedFails, tail))
     System.out.flush()
     spark.stop()
   }

@@ -33,6 +33,14 @@ class PlugRunner(
 
   def tableDir(name: String): String = s"$outDir/${plug.name}/$name"
 
+  /** How many state versions to retain after each commit: old versions
+    * only exist to serve replay of *their* batch, and the stream is never
+    * more than one batch behind — keep the committed version plus its
+    * predecessor. Without pruning the version directories grow without
+    * bound (directory-listing cost at high batch counts).
+    */
+  val StateKeepLast: Int = 2
+
   /** Process one micro-batch (callable directly for batch backfill — the
     * reference's "massive sync" mode, sync.sql:58-77, is exactly this
     * function over a historical block range).
@@ -42,14 +50,6 @@ class PlugRunner(
     * reference's B-tree indexes on block_num (SURVEY §4): block-range
     * predicates (F1) prune whole directories at scan planning time.
     */
-  /** How many state versions to retain after each commit: old versions
-    * only exist to serve replay of *their* batch, and the stream is never
-    * more than one batch behind — keep the committed version plus its
-    * predecessor. Without pruning the version directories grow without
-    * bound (directory-listing cost at high batch counts).
-    */
-  val StateKeepLast: Int = 2
-
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     val tables = plug.transform(batch)
     tables.foreach { case (name, df) =>
@@ -82,16 +82,19 @@ class PlugRunner(
           val bDir = new org.apache.hadoop.fs.Path(
             tableDir(name), s"_batch_id=$batchId")
           val bFs = bDir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-          if (bFs.exists(bDir)) {
-            val m = manifest(df.sparkSession, name)
-            writeManifest(df.sparkSession, name,
-              m.copy(live = (m.live.toSet + batchId).toSeq.sorted))
-          }
+          val current = manifest(df.sparkSession, name)
+          val m =
+            if (!bFs.exists(bDir)) current
+            else {
+              val added = current.copy(live = (current.live.toSet + batchId).toSeq.sorted)
+              writeManifest(df.sparkSession, name, added)
+              added
+            }
           // keep the directory count bounded: once enough per-batch
           // partitions accumulate, fold everything before this batch into
           // a compact segment (ids < batchId are past their replay window
           // — their source offsets committed before this batch started)
-          if (CompactEvery > 0 && manifest(df.sparkSession, name).live.size >= CompactEvery)
+          if (CompactEvery > 0 && m.live.size >= CompactEvery)
             compactAppends(df.sparkSession, name, batchId - 1)
       }
     }
@@ -152,15 +155,13 @@ class PlugRunner(
       // state versions and check-ins, and colliding with them would make
       // readBefore(base) miss the prior state (post-prune) and silently
       // rebuild merge tables from scratch.
-      val maxCheckIn = scala.util.Try(PlugState.maxBatchId(spark, outDir, plug.name))
-        .toOption.flatten
+      val maxCheckIn = PlugState.maxBatchId(spark, outDir, plug.name)
       val maxMerge = mergeFns.keys
         .flatMap(n => new ParquetStateStore(spark, tableDir(n)).latestVersion)
         .reduceOption(_ max _)
       val base = (maxCheckIn.toSeq ++ maxMerge.toSeq)
         .map(_ + 1).maxOption.getOrElse(0L)
-      val cursor = scala.util.Try(PlugState.latest(spark, outDir, plug.name))
-        .toOption.flatten
+      val cursor = PlugState.latest(spark, outDir, plug.name)
       val origin = (base, cursor.map(_._2).getOrElse(-1L))
       // write-then-rename so a crash can't leave a half-written pin
       val tmp = new org.apache.hadoop.fs.Path(checkpoint, "graft_stream_origin.tmp")
@@ -575,166 +576,156 @@ class PlugRunner(
 }
 
 /** Engine metadata (reference `hpp.plug_state`, database/sql/tables.sql:8-15):
-  * one row per processed batch — cursor (latest block), block time, wall
-  * check-in. Mostly subsumed by Structured Streaming checkpoints; kept as a
-  * queryable table because the status API (E3) reads it.
+  * per batch, the cursor (latest block), its block time and the wall
+  * check-in, read by the status API (E3) and the stream origin. Each
+  * check-in is one marker file `_plug_state/v=<batchId>` holding the line
+  * `batch_id,latest_block_num,latest_block_time,check_in` (block and time
+  * empty: a null cursor), committed like [[graft.sources.OpLogTail]]'s
+  * cursor and Spark's `HDFSMetadataLog`: the hidden `.v=<batchId>.tmp`
+  * renamed into place. Reads open a few small files and run no Spark
+  * job; a name or line that does not parse fails loudly.
   */
 object PlugState {
+  import java.time.Instant
+  import org.apache.hadoop.fs.{FileSystem, Path}
 
-  /** Check-in directories retained verbatim; older ones fold into the
-    * roll-up (see [[prune]]). Folding triggers at 2x this count so the
-    * listing+fold cost amortizes to O(1) per batch instead of running
-    * every check-in.
-    */
+  /** How many of the newest check-in markers [[prune]] keeps. */
   val KeepLast: Int = 8
 
+  private final case class Marker(batchId: Long, block: Option[Long],
+                                  blockTime: Option[Instant], checkIn: Instant) {
+    def line: String = Seq(batchId.toString, block.fold("")(_.toString),
+      blockTime.fold("")(_.toString), checkIn.toString).mkString(",")
+  }
+
+  private def store(spark: SparkSession, outDir: String, plugName: String): (FileSystem, Path) = {
+    val root = new Path(s"$outDir/$plugName/_plug_state")
+    (root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+  }
+
+  private def markerPath(root: Path, id: Long) = new Path(root, s"v=$id")
+
+  /** Committed ids from the marker NAMES, ascending, and crashed commits' `.tmp` files. */
+  private def list(fs: FileSystem, root: Path): (Seq[Long], Seq[Path]) =
+    if (!fs.exists(root)) (Nil, Nil)
+    else {
+      val all = fs.listStatus(root).toSeq
+      val ids = all.filter(_.getPath.getName.startsWith("v=")).map { s =>
+        s.getPath.getName.stripPrefix("v=").toLongOption.filter(_ => s.isFile)
+          .getOrElse(throw new IllegalStateException(s"not a plug-state marker: ${s.getPath}"))
+      }
+      val tmps = all.map(_.getPath)
+        .filter(p => p.getName.startsWith(".v=") && p.getName.endsWith(".tmp"))
+      (ids.sorted, tmps)
+    }
+
+  private def read(fs: FileSystem, root: Path, id: Long): Marker = {
+    val path = markerPath(root, id)
+    val in = fs.open(path)
+    val raw = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    def bad = new IllegalStateException(s"unreadable plug-state marker $path: '$raw'")
+    def instant(s: String) =
+      try Instant.parse(s) catch { case _: java.time.format.DateTimeParseException => throw bad }
+    raw.trim.split(",", -1) match {
+      case Array(b, block, time, at) if b.toLongOption.contains(id) =>
+        Marker(id,
+          if (block.isEmpty) None else Some(block.toLongOption.getOrElse(throw bad)),
+          if (time.isEmpty) None else Some(instant(time)),
+          instant(at))
+      case _ => throw bad
+    }
+  }
+
+  /** The cursor is one Spark job with no exchange: per-partition maxima,
+    * reduced on the driver (a global `agg` adds a shuffle stage, a second
+    * job under AQE). A replayed batch id overwrites its own marker.
+    */
   def checkIn(spark: SparkSession, outDir: String, plugName: String,
               batchId: Long, batch: DataFrame): Unit = {
-    val cursor = batch.agg(
-      max(col("block_num")).as("latest_block_num"),
-      max(col("timestamp")).as("latest_block_time"))
-    cursor
-      .withColumn("plug", lit(plugName))
-      .withColumn("batch_id", lit(batchId))
-      .withColumn("check_in", current_timestamp())
-      .write.mode("overwrite").parquet(s"$outDir/$plugName/_plug_state/v=$batchId")
+    val maxima = batch
+      .select(col("block_num").cast("long"), unix_micros(col("timestamp").cast("timestamp")))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val m = Array(Long.MinValue, Long.MinValue)
+        rows.foreach { r =>
+          if (!r.isNullAt(0)) m(0) = math.max(m(0), r.getLong(0))
+          if (!r.isNullAt(1)) m(1) = math.max(m(1), r.getLong(1))
+        }
+        Iterator(m)
+      }.collect()
+    def top(i: Int) = maxima.map(_(i)).maxOption.filter(_ != Long.MinValue)
+    val marker = Marker(batchId, top(0),
+      top(1).map(Instant.EPOCH.plus(_, java.time.temporal.ChronoUnit.MICROS)), Instant.now())
+    val (fs, root) = store(spark, outDir, plugName)
+    val target = markerPath(root, batchId)
+    val tmp = new Path(root, s".v=$batchId.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(marker.line.getBytes("UTF-8")) finally out.close()
+    // where rename will not replace an existing file (HDFS), a replayed
+    // batch id drops its old marker first
+    if (!fs.rename(tmp, target) && !(fs.delete(target, false) && fs.rename(tmp, target)))
+      throw new IllegalStateException(s"plug-state check-in failed: could not rename $tmp -> $target")
     prune(spark, outDir, plugName)
   }
 
-  private def stateRoot(outDir: String, plugName: String) =
-    new org.apache.hadoop.fs.Path(s"$outDir/$plugName/_plug_state")
-
-  private def versionIds(fs: org.apache.hadoop.fs.FileSystem,
-                         root: org.apache.hadoop.fs.Path): Seq[Long] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toLong).sorted
-
-  /** Bound the check-in directory count: without this, one `v=N` dir per
-    * batch accumulates forever (a year of minutely batches is ~500k
-    * directories, and [[read]]'s glob lists all of them on every status /
-    * origin probe). Everything older than the newest [[KeepLast]] dirs
-    * folds into a 1-2 row roll-up written AS the newest folded version
-    * (`v=maxFolded`), so readers need no new code path. The roll-up
-    * preserves exactly what the two consumers derive from history:
-    *
-    *  - the newest non-null-cursor row verbatim (for [[latest]] — the
-    *    status endpoint and stream-origin block cursor), and
-    *  - a null-cursor watermark row carrying the max folded batch id
-    *    (for [[maxBatchId]] — batch-id allocation), when that id's own
-    *    check-in had no cursor.
-    *
-    * The reference's `hpp.plug_state` is a single row per plug updated in
-    * place (database/sql/tables.sql:8-15), so folding history is faithful;
-    * the retained window is purely operational telemetry. Crash-safe:
-    * the summary lands in a hidden tmp dir (invisible to the `v=*` glob)
-    * and replaces `v=maxFolded` by rename; a crash before the source-dir
-    * deletes leaves rows the roll-up already subsumes (duplicates change
-    * neither argmax nor max), and the next check-in re-folds them.
+  /** Bound the marker count (the reference keeps one row per plug,
+    * updated in place): keep the newest [[KeepLast]] markers plus the
+    * newest OLDER one carrying a cursor, so [[latest]] stays answerable
+    * across any run of empty batches and a fork rollback that removes the
+    * window ([[truncateFrom]]) still finds the pre-fork cursor. Also
+    * sweeps the `.tmp` files of crashed commits.
     */
   def prune(spark: SparkSession, outDir: String, plugName: String,
             keepLast: Int = KeepLast): Unit = {
-    val root = stateRoot(outDir, plugName)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionIds(fs, root)
-    if (vs.size <= 2 * keepLast) return
-    val foldIds = vs.dropRight(keepLast)
-    val folded = spark.read.parquet(foldIds.map(v => s"$root/v=$v"): _*)
-    val schema = folded.schema
-    val all = folded.collect().toSeq // 1 row/dir + <=2 in a prior roll-up
-    val idOf = schema.fieldIndex("batch_id")
-    val blockOf = schema.fieldIndex("latest_block_num")
-    val maxId = foldIds.max
-    val cursorRow = all.filter(!_.isNullAt(blockOf))
-      .sortBy(_.getLong(idOf)).lastOption
-    val watermark =
-      if (cursorRow.exists(_.getLong(idOf) == maxId)) None
-      else all.find(_.getLong(idOf) == maxId).map { r =>
-        org.apache.spark.sql.Row.fromSeq(
-          r.toSeq.zipWithIndex.map { case (v, i) =>
-            if (i == blockOf || i == schema.fieldIndex("latest_block_time")) null else v
-          })
-      }
-    val summary = spark.createDataFrame(
-      spark.sparkContext.parallelize((cursorRow.toSeq ++ watermark.toSeq).toList, 1), schema)
-    val tmp = new org.apache.hadoop.fs.Path(root, ".rollup_tmp")
-    summary.write.mode("overwrite").parquet(tmp.toString)
-    val target = new org.apache.hadoop.fs.Path(root, s"v=$maxId")
-    fs.delete(target, true)
-    fs.rename(tmp, target)
-    foldIds.filter(_ != maxId)
-      .foreach(v => fs.delete(new org.apache.hadoop.fs.Path(root, s"v=$v"), true))
+    val (fs, root) = store(spark, outDir, plugName)
+    val (ids, tmps) = list(fs, root)
+    val older = ids.dropRight(keepLast)
+    val cursor = older.reverseIterator.find(read(fs, root, _).block.isDefined)
+    older.filterNot(cursor.contains).foreach(v => fs.delete(markerPath(root, v), false))
+    tmps.foreach(fs.delete(_, false))
   }
-
-  def read(spark: SparkSession, outDir: String, plugName: String): DataFrame =
-    spark.read.parquet(s"$outDir/$plugName/_plug_state/v=*")
 
   /** Highest committed batch id regardless of cursor content — empty
     * batches check in with a null cursor but still own their batch id
     * (and state version); anything allocating NEW batch ids must clear
-    * this, not [[latest]].
+    * this, not [[latest]]. The newest marker is never pruned, so the
+    * names alone answer.
     */
   def maxBatchId(spark: SparkSession, outDir: String, plugName: String): Option[Long] = {
-    val r = read(spark, outDir, plugName).agg(max(col("batch_id"))).collect().head
-    if (r.isNullAt(0)) None else Some(r.getLong(0))
+    val (fs, root) = store(spark, outDir, plugName)
+    list(fs, root)._1.lastOption
   }
 
-  /** Latest cursor per plug — the status-endpoint scan (S3). Check-ins of
-    * empty batches carry a null cursor and are skipped (the cursor is the
-    * newest batch that actually advanced the block high-water mark).
-    *
-    * Safe beside a live [[checkIn]] (the status endpoint polls while the
-    * feed writes): only committed (`_SUCCESS`) dirs are read, the newest
-    * [[KeepLast]] first — the ones a racing [[prune]] leaves in place —
-    * and the older dirs (the roll-up) only when none of those has a
-    * cursor. A listed dir that a prune deletes mid-read re-lists instead
-    * of failing the request.
+  /** Latest cursor per plug — the status-endpoint read (S3): (batch id,
+    * block) of the newest check-in with a non-null cursor, read newest
+    * first. Safe beside a live [[checkIn]]: only renamed-into-place
+    * markers are listed, and one that a racing [[prune]] deletes before
+    * it is read re-lists instead of skipping to an older cursor.
     */
   def latest(spark: SparkSession, outDir: String, plugName: String): Option[(Long, Long)] = {
-    val root = stateRoot(outDir, plugName)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dir(v: Long) = new org.apache.hadoop.fs.Path(root, s"v=$v")
-    def newest(vs: Seq[Long]): Option[(Long, Long)] =
-      if (vs.isEmpty) None
-      else spark.read.parquet(vs.map(dir(_).toString): _*)
-        .filter(col("latest_block_num").isNotNull)
-        .orderBy(col("batch_id").desc).limit(1).collect().headOption
-        .map(r => (r.getAs[Long]("batch_id"), r.getAs[Int]("latest_block_num").toLong))
-    def vanished(e: Throwable): Boolean =
-      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
-        case _: java.io.FileNotFoundException => true
-        case t: org.apache.spark.SparkThrowable => Option(t.getCondition)
-          .exists(c => c.startsWith("PATH_NOT_FOUND") || c.startsWith("FAILED_READ_FILE"))
-        case _ => false
+    val (fs, root) = store(spark, outDir, plugName)
+    def newest(): Option[(Long, Long)] = list(fs, root)._1.reverseIterator
+      .map(read(fs, root, _)).collectFirst { case Marker(id, Some(block), _, _) => (id, block) }
+    @annotation.tailrec def attempt(retries: Int): Option[(Long, Long)] =
+      (try Right(newest()) catch {
+        case e: java.io.FileNotFoundException if retries > 0 => Left(e)
+      }) match {
+        case Right(got) => got
+        case Left(_) => attempt(retries - 1)
       }
-    @annotation.tailrec def attempt(retries: Int): Option[(Long, Long)] = {
-      val vs = versionIds(fs, root)
-        .filter(v => fs.exists(new org.apache.hadoop.fs.Path(dir(v), "_SUCCESS")))
-      scala.util.Try(newest(vs.takeRight(KeepLast)).orElse(newest(vs.dropRight(KeepLast)))) match {
-        case scala.util.Failure(e) if retries > 0 && vanished(e) => attempt(retries - 1)
-        case got => got.get
-      }
-    }
     attempt(retries = 5)
   }
 
   /** Fork rollback of the check-in history: drop every `v >= fromBatch`
     * so [[latest]]/[[maxBatchId]] answer as of the pre-fork cursor (the
     * stream-origin pin then resumes the feed from the fork point). Same
-    * retained-window rule as [[ParquetStateStore.truncateFrom]]: the
-    * roll-up ([[prune]]) may have folded history, so a rollback reaching
-    * past every surviving check-in fails loudly instead of erasing the
-    * cursor entirely.
+    * retained-window rule as [[ParquetStateStore.truncateFrom]]: a
+    * rollback past every check-in [[prune]] kept fails loudly.
     */
   def truncateFrom(spark: SparkSession, outDir: String, plugName: String,
                    fromBatch: Long): Unit = {
     validateTruncateFrom(spark, outDir, plugName, fromBatch)
-    val root = stateRoot(outDir, plugName)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    versionIds(fs, root).filter(_ >= fromBatch).foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"v=$v"), true))
+    val (fs, root) = store(spark, outDir, plugName)
+    list(fs, root)._1.filter(_ >= fromBatch).foreach(v => fs.delete(markerPath(root, v), false))
   }
 
   /** The retained-check-in bound of [[truncateFrom]] alone, mutation-free
@@ -743,9 +734,8 @@ object PlugState {
     */
   def validateTruncateFrom(spark: SparkSession, outDir: String,
                            plugName: String, fromBatch: Long): Unit = {
-    val root = stateRoot(outDir, plugName)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionIds(fs, root)
+    val (fs, root) = store(spark, outDir, plugName)
+    val vs = list(fs, root)._1
     if (vs.exists(_ >= fromBatch))
       require(vs.exists(_ < fromBatch),
         s"plug-state rollback to batch $fromBatch reaches past every " +

@@ -8,8 +8,9 @@ import scala.jdk.CollectionConverters._
 /** Supervisor/health equivalent (reference: 60s supervisor loop
   * database/plugs.py:89-102 + health rules server/system_status.py:12-29).
   * Spark handles task liveness and restart natively; what remains is the
-  * freshness SLO: a plug is GOOD when it has checked in recently and its
-  * processed-offset lag is small.
+  * freshness SLO, checked here as recency only: a plug is GOOD when its
+  * query reported progress within `staleAfterMs`. Lag in blocks behind
+  * the source head is not checked (ROADMAP direction 4).
   */
 class StreamHealth(staleAfterMs: Long = 60000) extends StreamingQueryListener {
 

@@ -474,5 +474,17 @@ class HttpApiSpec extends SparkSpec {
     }
   }
 
+  test("status over two plugs' check-ins runs no Spark job") {
+    val out = java.nio.file.Files.createTempDirectory("status").toString
+    Seq("podping", "polls").foreach(graft.streaming.PlugState.checkIn(spark, out, _, 0L, fixture))
+    val status = HttpApi.statusFrom(
+      new graft.streaming.StreamHealth(), spark, out, Seq("podping", "polls"))
+    val (got, jobs) = countJobs(status())
+    assert(jobs === 0L)
+    val plugs = got("plugs").asInstanceOf[Map[String, Map[String, Any]]]
+    assert(plugs.map { case (p, m) => p -> (m("batch_id"), m("latest_block_num")) } ===
+      Map("podping" -> (0L, 103L), "polls" -> (0L, 103L)))
+  }
+
   override def afterAll(): Unit = { api.stop(); super.afterAll() }
 }

@@ -203,6 +203,40 @@ class StreamingSpec extends SparkSpec {
     assert(PlugState.latest(spark, out, "podping") === Some((58L, 158L)))
   }
 
+  test("plug_state check-in is one Spark job and one marker line; a crashed commit's tmp is ignored, then swept") {
+    import graft.streaming.PlugState
+    val out = tmp()
+    val batch = opLog(spark, Seq(
+      op(1, 100, 0, "2024-01-01 00:00:00", "podping", podpingV03(Seq("u1"))),
+      op(2, 104, 0, "2024-01-01 00:00:12", "podping", podpingV03(Seq("u2")))))
+    val (_, jobs) = countJobs(PlugState.checkIn(spark, out, "podping", 0L, batch))
+    assert(jobs === 1L)
+    val dir = java.nio.file.Paths.get(out, "podping", "_plug_state")
+    assert(java.nio.file.Files.readString(dir.resolve("v=0"))
+      .startsWith("0,104,2024-01-01T00:00:12Z,"))
+    // a commit that crashed before its rename leaves only the hidden tmp
+    java.nio.file.Files.writeString(dir.resolve(".v=1.tmp"), "1,999,")
+    assert(PlugState.latest(spark, out, "podping") === Some((0L, 104L)))
+    assert(PlugState.maxBatchId(spark, out, "podping") === Some(0L))
+    PlugState.checkIn(spark, out, "podping", 1L, opLog(spark, Seq.empty))
+    assert(!dir.toFile.list().exists(_.endsWith(".tmp")))
+    assert(PlugState.maxBatchId(spark, out, "podping") === Some(1L))
+    assert(PlugState.latest(spark, out, "podping") === Some((0L, 104L)))
+  }
+
+  test("a garbled plug_state marker fails the stream start instead of re-deriving its origin") {
+    val src = tmp(); val out = tmp(); val ckpt = tmp()
+    writeBatch(src, 1, Seq(
+      op(1, 100, 0, "2024-01-01 00:00:00", "podping", podpingV03(Seq("u1")))))
+    val runner = new PlugRunner(Podping, out)
+    runner.processBatch(spark.read.schema(OpLog.schema).parquet(s"$src/b1"), 0L)
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(out, "podping", "_plug_state", "v=1"), "garbage")
+    val e = intercept[IllegalStateException](runner.start(stream(src), ckpt))
+    assert(e.getMessage.contains("v=1"))
+    assert(!new java.io.File(ckpt, "graft_stream_origin").exists(), "an origin was pinned")
+  }
+
   test("backfill: chunked historical batches, then plug_state cursor advances") {
     val src = tmp(); val out = tmp()
     writeBatch(src, 1, (0 until 30).map { i =>
